@@ -33,7 +33,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from metrocloud_data_pipeline_spark.queries import get_queries
-from metrocloud_data_pipeline_spark.session import get_spark
+from metrocloud_data_pipeline_spark.session import (
+    CODEGEN_CACHE_CONF,
+    codegen_compilations,
+    get_spark,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -459,11 +463,16 @@ def main() -> None:
     # intact without touching live persists.
     import gc
 
+    # generated classes compiled per key and run (codegen-cache misses;
+    # read outside the timed region)
+    compiled: dict[str, list[int]] = {name: [] for name in HEADLINE}
     for _ in range(runs):
         for name in HEADLINE:
+            c0 = codegen_compilations(spark)
             t0 = time.perf_counter()
             run_noop(qs[name](spark, SF_DIR))
             samples[name].append(time.perf_counter() - t0)
+            compiled[name].append(codegen_compilations(spark) - c0)
             gc.collect()
     timings = {name: round(statistics.median(ts), 3) for name, ts in samples.items()}
     sentinel_sec = timings[SENTINEL]
@@ -504,11 +513,23 @@ def main() -> None:
     }
     # self-archive the FULL document next to the script: the driver
     # artifact keeps the summary, this file keeps every per-query
-    # number (and is the _vs_prev fallback when the newest BENCH_r*.json
-    # is a truncated tail)
+    # number, the per-key codegen compilations and the effective session
+    # settings (and is the _vs_prev fallback when the newest
+    # BENCH_r*.json is a truncated tail)
     here = os.path.dirname(os.path.abspath(__file__))
+    sc = spark.sparkContext
+    archive = {
+        **out,
+        "codegen_compilations": compiled,
+        "session": {
+            "master": sc.master,
+            "default_parallelism": sc.defaultParallelism,
+            "codegen_cache_max_entries": int(spark.conf.get(CODEGEN_CACHE_CONF)),
+            "sf_dir": SF_DIR,
+        },
+    }
     with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as f:
-        json.dump(out, f, indent=1)
+        json.dump(archive, f, indent=1)
     # PRINTED line = the driver contract dict ("queries" + the compact
     # summary) WITHOUT the two derived per-query dicts (queries_norm,
     # vs_prev_norm_ratio — both archived in BENCH_LOCAL.json above).

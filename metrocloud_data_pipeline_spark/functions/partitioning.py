@@ -25,8 +25,12 @@ parallelism cap, preserving the at-scale no-op property.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+_log = logging.getLogger(__name__)
 
 # Catalyst-style per-type default sizes (EstimationUtils.getSizePerRow:
 # 8 bytes of row overhead + each field's defaultSize). Only used to turn
@@ -65,8 +69,9 @@ def _field_width(dt: T.DataType) -> int:
 def _estimated_rows(df: DataFrame) -> int | None:
     """Row estimate from the optimized plan's statistics: rowCount when
     the plan carries one, else sizeInBytes / schema row width. Returns
-    None when stats are unavailable — callers fall back to the plain
-    parallelism target."""
+    None, with a warning naming the exception, when stats are
+    unavailable — callers then fall back to the plain parallelism
+    target, i.e. the size cap is off."""
     try:
         stats = df._jdf.queryExecution().optimizedPlan().stats()
         rc = stats.rowCount()
@@ -75,7 +80,12 @@ def _estimated_rows(df: DataFrame) -> int | None:
         size = int(stats.sizeInBytes())
         width = 8 + sum(_field_width(f.dataType) for f in df.schema.fields)
         return max(1, size // max(width, 1))
-    except Exception:  # pragma: no cover - stats access is best-effort
+    except Exception as exc:
+        first_line = (str(exc).strip().splitlines() or [""])[0]
+        _log.warning(
+            "plan statistics unavailable (%s: %s); fan-out width is not "
+            "capped by estimated rows", type(exc).__name__, first_line,
+        )
         return None
 
 
