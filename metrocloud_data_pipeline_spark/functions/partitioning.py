@@ -69,24 +69,33 @@ def _field_width(dt: T.DataType) -> int:
 def _estimated_rows(df: DataFrame) -> int | None:
     """Row estimate from the optimized plan's statistics: rowCount when
     the plan carries one, else sizeInBytes / schema row width. Returns
-    None, with a warning naming the exception, when stats are
-    unavailable — callers then fall back to the plain parallelism
-    target, i.e. the size cap is off."""
+    None, with a warning naming the reason, when stats are unavailable:
+    reading them raised, or a leaf of the plan reports Catalyst's
+    unknown-size default (`spark.sql.defaultSizeInBytes`, e.g. a frame
+    built from local Python rows) — every estimate above it is that
+    placeholder scaled, and would pose as a real count. Callers then
+    fall back to their unsized default (the plain parallelism target,
+    no free broadcast proof, one IVF block)."""
     try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        rc = stats.rowCount()
-        if rc.isDefined():
-            return int(rc.get())
-        size = int(stats.sizeInBytes())
-        width = 8 + sum(_field_width(f.dataType) for f in df.schema.fields)
-        return max(1, size // max(width, 1))
+        plan = df._jdf.queryExecution().optimizedPlan()
+        unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+        leaves = plan.collectLeaves()
+        if all(int(leaves.apply(i).stats().sizeInBytes()) < unknown for i in range(leaves.size())):
+            stats = plan.stats()
+            rc = stats.rowCount()
+            if rc.isDefined():
+                return int(rc.get())
+            width = 8 + sum(_field_width(f.dataType) for f in df.schema.fields)
+            return max(1, int(stats.sizeInBytes()) // max(width, 1))
+        reason = "a plan leaf has no size estimate"
     except Exception as exc:
         first_line = (str(exc).strip().splitlines() or [""])[0]
-        _log.warning(
-            "plan statistics unavailable (%s: %s); fan-out width is not "
-            "capped by estimated rows", type(exc).__name__, first_line,
-        )
-        return None
+        reason = f"{type(exc).__name__}: {first_line}"
+    _log.warning(
+        "plan statistics unavailable (%s); the row estimate falls back to "
+        "its unsized default", reason,
+    )
+    return None
 
 
 def fan_out_scan(

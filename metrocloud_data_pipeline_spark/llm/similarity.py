@@ -18,8 +18,11 @@ prefilter) is unchanged.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.numeric import round6
 
@@ -686,6 +689,110 @@ def ivf_corpus_table(
     return table_name
 
 
+# Exact in-block pruning margin for knn_join_ivf. round6 moves a value by
+# at most 5e-7, so a raw cosine more than 2e-6 below the k-th best raw
+# cosine of the same query rounds STRICTLY below k others and can never
+# reach rank <= k, whatever the vec_id tie-break.
+_IVF_PRUNE_MARGIN = 2e-6
+
+
+def _ivf_block_counts(q_side, listed, n_lists: int, nprobe: int, t: int):
+    """(query blocks, corpus blocks) for knn_join_ivf's cogroup: enough
+    hash blocks that an average (list, query block, corpus block) group
+    holds at most `t` rows per side — `t` being Spark's Arrow batch
+    size. Row counts come from plan statistics; without them (a warning
+    is logged), one block each."""
+    from ..functions.partitioning import _estimated_rows
+
+    est_q, est_c = _estimated_rows(q_side), _estimated_rows(listed)
+    nbq = -(-est_q * nprobe // (n_lists * t)) if est_q else 1
+    nbc = -(-est_c // (n_lists * t)) if est_c else 1
+    return max(1, nbq), max(1, nbc)
+
+
+def _ivf_block_scorer(k: int, exclude_self: bool, t: int):
+    """The cogroup kernel of knn_join_ivf: scores one (list, query
+    block, corpus block) group — the query rows probing the list against
+    the list's corpus rows — and returns (q_id, vec_id, label,
+    cosine_sim) for the candidates that can still rank in the top k.
+
+    Each pair's cosine is cosine_batch's arithmetic on the same two
+    vectors: the elementwise (A*B).sum over the last axis (numpy's
+    per-row summation, NOT a BLAS matmul, whose summation order
+    differs), the same norms, and NULL for a zero norm or a NaN — so
+    the values are bit-identical to the pairwise plan. Queries are
+    evaluated in chunks so that no product temporary exceeds t x dim
+    doubles.
+
+    Pruning is exact (_IVF_PRUNE_MARGIN): per query, a non-NULL
+    candidate more than the margin below the query's k-th best raw
+    cosine in the block is dropped; NULL candidates (which rank last,
+    ties to the smaller vec_id) are kept only to fill the block up to k
+    rows, smallest vec_ids first."""
+    import numpy as np
+    import pandas as pd
+
+    def score(q, c):
+        if q.empty or c.empty:
+            return pd.DataFrame(columns=["q_id", "vec_id", "label", "cosine_sim"])
+        # vec_id order makes the NULL fill below a running count
+        c = c.sort_values("vec_id", kind="stable")
+        C = np.vstack(c["embedding"].values).astype(np.float64)
+        Q = np.vstack(q["q_emb"].values).astype(np.float64)
+        vid = c["vec_id"].to_numpy()
+        qid = q["q_id"].to_numpy()
+        cn = np.sqrt((C * C).sum(1))
+        qn = np.sqrt((Q * Q).sum(1))
+        n = len(C)
+        c_step = min(n, t)
+        q_step = max(1, t // c_step)
+        rows, picks, sims, nulls = [], [], [], []
+        for s in range(0, len(Q), q_step):
+            Qs = Q[s : s + q_step]
+            num = np.concatenate(
+                [(C[None, j : j + c_step] * Qs[:, None]).sum(-1) for j in range(0, n, c_step)],
+                axis=1,
+            )
+            den = cn[None, :] * qn[s : s + q_step, None]
+            ok = den > 0.0
+            with np.errstate(invalid="ignore"):
+                sim = np.where(ok, num / np.where(ok, den, 1.0), 0.0)
+            null = ~ok | np.isnan(sim)
+            if exclude_self:
+                live = qid[s : s + q_step, None] != vid[None, :]
+            else:
+                live = np.ones_like(ok)
+            scored = live & ~null
+            key = np.where(scored, sim, -np.inf)
+            if n > k:
+                kth = np.partition(key, n - k, axis=1)[:, n - k]
+            else:
+                kth = np.full(len(Qs), -np.inf)
+            keep = scored & (key >= (kth - _IVF_PRUNE_MARGIN)[:, None])
+            fill = live & null
+            room = k - scored.sum(1)
+            keep |= fill & (np.cumsum(fill, axis=1) <= room[:, None])
+            i, j = np.nonzero(keep)
+            rows.append(s + i)
+            picks.append(j)
+            sims.append(sim[i, j])
+            nulls.append(null[i, j])
+        i, j = np.concatenate(rows), np.concatenate(picks)
+        null = np.concatenate(nulls)
+        return pd.DataFrame(
+            {
+                "q_id": qid[i],
+                "vec_id": vid[j],
+                "label": c["label"].iloc[j].reset_index(drop=True),
+                "cosine_sim": pd.arrays.FloatingArray(
+                    np.where(null, 0.0, np.concatenate(sims)), null
+                ),
+            }
+        )
+
+    return score
+
+
 def knn_join_ivf(
     embeddings: DataFrame,
     k: int = 10,
@@ -708,9 +815,9 @@ def knn_join_ivf(
 
     `corpus_filter` (boolean Column over corpus columns) = FILTERED
     ANN: candidates are restricted to rows satisfying the predicate,
-    applied to the listed corpus BEFORE the probe join (pre-filtering —
-    with a bucketed corpus table the predicate pushes into the scan,
-    so non-matching buckets' rows never reach the join). The caveat
+    applied to the listed corpus BEFORE scoring (pre-filtering — with a
+    bucketed corpus table the predicate pushes into the scan, so
+    non-matching buckets' rows never reach the kernel). The caveat
     every filtered-ANN system carries: the probe still selects lists
     by the UNfiltered geometry, so a highly selective filter can leave
     fewer than k candidates in the probed lists — raise nprobe with
@@ -720,17 +827,32 @@ def knn_join_ivf(
 
     Plan shape at 100 TB: centroid selection per query is one Arrow
     batch pass against the broadcast codebook (same as assignment); the
-    probe explode carries each query nprobe times into a join keyed on
-    list_id — with the corpus written bucketed by list_id
-    (maintenance.write_bucketed) that join is bucket-pruned and
-    shuffle-free on the corpus side; candidate scoring is a vectorized
-    matmul per Arrow batch; the final top-k window shuffles only
-    (q_id, vec_id, sim) rows, k-boundable. Recall < 1 by construction —
-    measured against knn_join_brute in tests.
+    probe explode carries each query nprobe times to its lists.
+    Candidates are scored one LIST BLOCK at a time (FAISS's inverted-
+    list scan): the probes and the listed corpus are cogrouped on
+    (list_id, qb, cb) and one pandas kernel (_ivf_block_scorer) scores
+    every query of the group against every corpus row of the group, so
+    each vector crosses the Arrow boundary once per block instead of
+    once per candidate pair. The blocks bound the groups at any scale
+    without a knob: cb = pmod(xxhash64(vec_id), nbc) and qb =
+    pmod(xxhash64(q_id), nbq), with nbc = ceil(corpus rows / (n_lists *
+    T)) and nbq = ceil(query rows * nprobe / (n_lists * T)) from plan
+    statistics, T being spark.sql.execution.arrow.maxRecordsPerBatch;
+    each side is replicated over the other side's block count, so one
+    block each (any corpus under n_lists * T rows) replicates nothing.
+    The kernel's cosines are bit-identical to cosine_batch's, and it
+    prunes EXACTLY: per query and block it keeps only candidates that
+    can still rank in the top k after round6 (_IVF_PRUNE_MARGIN), so
+    the rank window — round6, then (desc cosine_sim, asc vec_id) per
+    q_id, in Spark — shuffles about k rows per query and block. With
+    the corpus written bucketed by list_id (maintenance.write_bucketed)
+    and one block each, the corpus side of the cogroup is shuffle-free.
+    Recall < 1 by construction — measured against knn_join_brute in
+    tests.
 
     Pass `listed` (an ivf_corpus_table, bucketed on list_id, built with
     the SAME stride) to skip the assignment pass and make the corpus
-    side of the probe join exchange-free.
+    side of the cogroup exchange-free.
 
     Pass `queries` (a (vec_id, embedding) frame) to run EXTERNAL-query
     serving instead of the self-join default: the batch of queries is
@@ -840,25 +962,17 @@ def knn_join_ivf(
         # may reference any metadata column — the float-path twin of
         # ivfpq_corpus_table's attach_cols (ADVICE r11); Catalyst prunes
         # the unreferenced ones right back out of the scan.
-        # r15: the corpus side is the STREAM side of the probe BHJ, so
-        # the assignment kernel AND the post-join cosine kernel both
-        # run at the scan's parallelism — a single-file local corpus
-        # planned one split and serialized ~1M-pair Arrow scoring onto
-        # one core. fan_out_scan round-robins it up to the session
-        # parallelism only when the scan is narrower (no-op at scale).
-        from ..functions.partitioning import fan_out_scan
-
-        # r16 width re-sweep (VERDICT r15 #2): isolated medians 3.62 s
-        # at width 8, 3.27 s at 16, 3.61 s at 32 with overlapping
-        # spreads — full width kept (the post-join cosine kernel is
-        # ~31k pairs/task at 32, real work, and at-scale the scan is
-        # wide anyway); no rows_per_task hint.
-        listed = fan_out_scan(embeddings).select(
+        # No fan_out_scan: scoring runs after the cogroup exchange at
+        # the shuffle width, so a round-robin would only widen this
+        # cheap per-row assignment at the price of one more shuffle
+        # stage (perfbench's 500-vector corpus, local[2] on a 4-CPU
+        # host: 5 -> 4 Spark jobs, about 1.5 -> 1.0 s per run).
+        listed = embeddings.select(
             "*", F.element_at(nearest_lists(F.col("embedding")), 1).alias("list_id")
         )
 
     if corpus_filter is not None:
-        # filtered ANN: prune the corpus side before the probe join —
+        # filtered ANN: prune the corpus side before scoring —
         # on a bucketed table this reaches the parquet scan
         listed = listed.where(corpus_filter)
 
@@ -873,23 +987,43 @@ def knn_join_ivf(
         F.col("embedding").alias("q_emb"),
         F.explode(nearest_lists(F.col("embedding"))).alias("list_id"),
     )
-    cos = cosine_batch()
-    joined = probes.join(listed, "list_id")
-    if queries is None or exclude_self:
-        # self-ANN: a vector is not its own neighbor
-        joined = joined.where(F.col("vec_id") != F.col("q_id"))
+    cands = listed.select("vec_id", "embedding", "label", "list_id")
+    # block keys: each query meets each list's corpus rows in exactly one
+    # (list_id, qb, cb) group — a side is replicated over the OTHER
+    # side's block count, so one block each (the common case) replicates
+    # nothing and the groups are plain lists
+    spark = embeddings.sparkSession
+    t = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    if t <= 0:  # Spark's spelling of an unlimited batch
+        t = sys.maxsize
+    nbq, nbc = _ivf_block_counts(q_side, cands, len(ids), min(nprobe, len(ids)), t)
+    keys = ["list_id"]
+    if nbq > 1:
+        keys.append("qb")
+        probes = probes.withColumn("qb", F.pmod(F.xxhash64("q_id"), F.lit(nbq)).cast("int"))
+        cands = cands.withColumn("qb", F.explode(F.sequence(F.lit(0), F.lit(nbq - 1))))
+    if nbc > 1:
+        keys.append("cb")
+        cands = cands.withColumn("cb", F.pmod(F.xxhash64("vec_id"), F.lit(nbc)).cast("int"))
+        probes = probes.withColumn("cb", F.explode(F.sequence(F.lit(0), F.lit(nbc - 1))))
+    out_schema = T.StructType(
+        [
+            T.StructField("q_id", q_side.schema["vec_id"].dataType),
+            T.StructField("vec_id", cands.schema["vec_id"].dataType),
+            T.StructField("label", cands.schema["label"].dataType),
+            T.StructField("cosine_sim", T.DoubleType()),
+        ]
+    )
+    # no dedup needed: each corpus vector sits in exactly ONE list
+    # (argmax centroid) and nearest_lists emits distinct list_ids per
+    # query, so a (q_id, vec_id) pair can meet at most once
     scored = (
-        joined
-        .select(
-            "q_id",
-            "vec_id",
-            "label",
-            round6(cos(F.col("embedding"), F.col("q_emb"))).alias("cosine_sim"),
+        probes.groupBy(*keys)
+        .cogroup(cands.groupBy(*keys))
+        .applyInPandas(
+            _ivf_block_scorer(k, queries is None or exclude_self, t), out_schema
         )
-        # no dedup needed: ivf_assignments places each vector in exactly ONE
-        # list (argmax centroid) and nearest_lists emits distinct list_ids per
-        # query, so a (q_id, vec_id) pair can meet at most once — a
-        # dropDuplicates here would be a pure no-op costing a full exchange
+        .select("q_id", "vec_id", "label", round6(F.col("cosine_sim")).alias("cosine_sim"))
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
     return (

@@ -32,11 +32,18 @@ def _word_stats_fit_broadcast(frame, *keys: str, measure: bool = True) -> bool:
     """Decide whether word-keyed stats frames derived from `frame` may
     carry an explicit broadcast hint. Two tiers:
 
-    1. FREE proof from plan statistics: the estimated row count of the
-       (checkpointed) frame upper-proxies its distinct keys; when even
-       a 256x error margin (compression ratio x schema-width scaling,
-       both observed well under 32x locally) keeps it inside
+    1. FREE proof from plan statistics, for a materialized frame only
+       (its optimized plan is a LogicalRDD: a checkpoint, whose
+       statistics no later plan rewrite changes): the estimated row
+       count upper-proxies its distinct keys; when even a 256x error
+       margin (compression ratio x schema-width scaling, both observed
+       well under 32x locally) keeps it inside
        `_WORD_STATS_BROADCAST_MAX`, broadcast without running anything.
+       Any other frame falls through to tier 2. The checkpoint does not
+       make the estimate exact: on Spark 4.1 a LogicalRDD keeps the
+       estimate of the plan it was checkpointed from (a checkpointed
+       explode reports its pre-explode size), so the margin still has
+       to absorb that plan's estimation error.
     2. Otherwise MEASURE: one approx_count_distinct pass over the
        already-materialized frame (an aggregation job — negligible next
        to the corpus passes at any scale where this tier triggers)
@@ -46,9 +53,11 @@ def _word_stats_fit_broadcast(frame, *keys: str, measure: bool = True) -> bool:
     """
     from ..functions.partitioning import _estimated_rows
 
-    est = _estimated_rows(frame)
-    if est is not None and est * 256 <= _WORD_STATS_BROADCAST_MAX:
-        return True
+    plan = frame._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        est = _estimated_rows(frame)
+        if est is not None and est * 256 <= _WORD_STATS_BROADCAST_MAX:
+            return True
     if not measure:
         # un-materialized frame: counting it would recompute the whole
         # corpus lineage — withhold the hint instead (safe either way)

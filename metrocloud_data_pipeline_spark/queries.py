@@ -16,6 +16,7 @@ Determinism contract (both sides, by construction):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +29,7 @@ from .operators import ingest, observability as OBS, temporal
 from .plans import star_queries as H
 from .session import tune
 from .sources import load
+from .sources.star_schema import _file_stamp
 
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -2937,25 +2939,33 @@ def embed_pq_stats(spark, sf_dir):
 # train-once-per-corpus-snapshot cache for the registered ANN queries:
 # the production posture is fit at ingest, serve forever (the bench's
 # warm-cache methodology note) — re-fitting per query call would bill
-# the one-time train cost to every probe. Keyed by sf_dir; the fit is
-# deterministic, so a cached codebook is bit-identical to a fresh one.
+# the one-time train cost to every probe. Keyed like sources.load's scan
+# memo: the embeddings file's absolute path, refit when its stamp
+# changes (a rewritten table), never cached for a path off the local
+# filesystem. The fit is deterministic, so a cached codebook is
+# bit-identical to a fresh one of the same files.
 _TRAINED_CB: dict[str, tuple] = {}
 
 
 def _corpus_codebook(spark, sf_dir):
-    if sf_dir not in _TRAINED_CB:
-        emb = load(spark, sf_dir, "embeddings")
-        _TRAINED_CB[sf_dir] = similarity.trained_codebook(
-            emb, k=similarity._auto_train_k(emb)
-        )
-    return _TRAINED_CB[sf_dir]
+    path = os.path.abspath(os.path.join(sf_dir, "embeddings.parquet"))
+    stamp = _file_stamp(path)
+    hit = _TRAINED_CB.get(path)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return hit[1]
+    emb = load(spark, sf_dir, "embeddings")
+    codebook = similarity.trained_codebook(emb, k=similarity._auto_train_k(emb))
+    if stamp is not None:
+        _TRAINED_CB[path] = (stamp, codebook)
+    return codebook
 
 
 @q("knn_join_ivf")
 def knn_join_ivf(spark, sf_dir):
     """Batch ANN scale path: top-10 neighbor lists for EVERY vector,
     scoring only each query's 4 nearest IVF lists (corpus x nprobe/
-    n_lists candidates, Arrow-batched matmul scoring). The coarse
+    n_lists candidates, scored one list block at a time by a pandas
+    cogroup kernel). The coarse
     quantizer is the r7 DEFAULT: k-means trained, auto-sized from the
     corpus (the measured-good operating point, PROBE_r06/r07); the fit
     is deterministic and cached per corpus snapshot — train once at
@@ -2975,7 +2985,7 @@ def knn_join_ivf_bucketed(spark, sf_dir):
     """knn_join_ivf against a PRE-BUILT corpus layout: the IVF-listed
     corpus materialized as a table bucketed on list_id
     (similarity.ivf_corpus_table), the build-at-ingest form a serving
-    corpus would use. The probe join then reads the corpus
+    corpus would use. The scoring cogroup then reads the corpus
     bucket-to-bucket — its exchange disappears (5 -> 2 exchanges
     measured by tools/scale_probe.py, result rows identical), which at
     100 TB removes the join's dominant shuffle. Output is byte-equal

@@ -14,9 +14,9 @@ scored against the pre-built corpus layout:
   1.00 — so the default operating point is the measured-good one);
   every micro-batch probes the same lists the corpus was listed by;
 - with `corpus_table` a bucketed ivf_corpus_table, the corpus side of
-  the probe join reads bucket-to-bucket — per batch the only moving
-  data is the (small) query band: batch rows broadcast, corpus rows
-  never shuffle. A pre-built table REQUIRES its persisted quantizer
+  the scoring cogroup reads bucket-to-bucket — per batch the only
+  moving data is the (small) query band: the batch's probe rows
+  shuffle to their lists, corpus rows never shuffle. A pre-built table REQUIRES its persisted quantizer
   ((codebook, fingerprint) from load_ivf_quantizer) — knn_join_ivf
   refuses the combination otherwise, because probing a layout with a
   different quantizer's list_ids returns silently wrong neighbors;
@@ -167,7 +167,7 @@ def run_ann_serving_stream(
 
     `corpus_filter` (boolean Column over corpus columns) serves
     FILTERED search: every batch's candidates are restricted to rows
-    satisfying the predicate before the probe join (knn_join_ivf's
+    satisfying the predicate before scoring (knn_join_ivf's
     corpus_filter — on a bucketed corpus_table the predicate reaches
     the scan). Size nprobe to the predicate's selectivity and audit
     with knn_filtered_recall_report before deploying: pre-filtering

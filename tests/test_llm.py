@@ -3097,6 +3097,18 @@ def test_kn_word_stats_broadcast_gate(spark, monkeypatch):
     assert gated == baseline
 
 
+def test_kn_word_stats_free_tier_needs_a_materialized_frame(spark):
+    """The free tier trusts plan statistics only on a materialized
+    (checkpointed) frame: an un-checkpointed frame with a tiny estimate
+    — 12 rows, an exact rowCount — falls through to the measured tier,
+    which measure=False withholds."""
+    frame = spark.range(12).select(F.col("id").cast("string").alias("prev"))
+    assert text._word_stats_fit_broadcast(frame, "prev", measure=False) is False
+    assert text._word_stats_fit_broadcast(frame, "prev") is True  # measured
+    checkpointed = frame.localCheckpoint()
+    assert text._word_stats_fit_broadcast(checkpointed, "prev", measure=False) is True
+
+
 def test_kn_trigram_surprisal_hand_computed(spark):
     import math
 
@@ -3925,6 +3937,205 @@ def test_knn_join_ivf_corpus_filter_any_metadata_column(spark):
     ).where(F.col("source") != "web").count() == 0
 
 
+# --- knn_join_ivf block kernel vs the pairwise plan ---------------------------
+
+# A basis codebook: a vector's similarity to list i is exactly its i-th
+# coordinate, so the lists the reference picks with numpy cannot drift
+# from the engine's by a rounding ulp.
+_BASIS_DIM, _BASIS_LISTS = 8, 4
+
+
+def _basis_codebook():
+    import numpy as np
+
+    return np.arange(_BASIS_LISTS), np.eye(_BASIS_LISTS, _BASIS_DIM)
+
+
+def _kernel_corpus(spark):
+    """72 clustered vectors, 4 exact copies of vec 0 (cosine ties),
+    2 zero-norm vectors (NULL cosines) and a `source` metadata column."""
+    rows = []
+    for vid in range(72):
+        c = vid % _BASIS_LISTS
+        v = [0.0] * _BASIS_DIM
+        v[c] = 1.0
+        v[(c + 1) % _BASIS_LISTS] = 0.1 + 0.6 * ((vid * 5) % 7) / 7
+        v[(c + 2) % _BASIS_LISTS] = 0.05 * ((vid * 3) % 5)
+        v[4 + vid % 4] = 0.3 * ((vid * 7) % 13) / 13
+        rows.append((vid, v, c, "web" if vid % 3 else "books"))
+    rows += [(vid, rows[0][1], 0, "web") for vid in range(72, 76)]
+    rows += [(vid, [0.0] * _BASIS_DIM, 9, "web") for vid in (76, 77)]
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int, source string"
+    )
+
+
+def _pairwise_knn_join_ivf(spark, corpus, k, nprobe, queries=None, exclude_self=False,
+                           corpus_filter=None, max_queries=None):
+    """knn_join_ivf's pairwise plan: join every probe with every member
+    of its list, score each pair with cosine_batch, rank in Spark."""
+    import numpy as np
+    from pyspark.sql.window import Window
+
+    from metrocloud_data_pipeline_spark.functions.numeric import round6
+
+    ids, code = _basis_codebook()
+
+    def nearest(frame, n):
+        rows = frame.select("vec_id", "embedding").collect()
+        a = np.vstack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
+        norm = np.linalg.norm(a, axis=1, keepdims=True)
+        norm[norm == 0.0] = 1.0
+        order = np.argsort(-((a / norm) @ code.T), axis=1, kind="stable")[:, :n]
+        pairs = [(r["vec_id"], int(ids[j])) for r, o in zip(rows, order) for j in o]
+        return spark.createDataFrame(pairs, "vec_id long, list_id long")
+
+    listed = corpus.join(nearest(corpus, 1), "vec_id")
+    if corpus_filter is not None:
+        listed = listed.where(corpus_filter)
+    q_side = queries if queries is not None else corpus
+    if max_queries is not None:
+        q_side = q_side.where(F.col("vec_id") < max_queries)
+    probes = q_side.join(nearest(q_side, nprobe), "vec_id").select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"), "list_id"
+    )
+    joined = probes.join(listed, "list_id")
+    if queries is None or exclude_self:
+        joined = joined.where(F.col("vec_id") != F.col("q_id"))
+    cos = similarity.cosine_batch()
+    scored = joined.select(
+        "q_id", "vec_id", "label",
+        round6(cos(F.col("embedding"), F.col("q_emb"))).alias("cosine_sim"),
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k).select(
+        "q_id", "vec_id", "label", "cosine_sim", "rank"
+    )
+
+
+def _kernel_cases(spark, corpus):
+    ext = spark.createDataFrame(
+        [(1000 + i, [float((i * j) % 5) - 1.5 for j in range(_BASIS_DIM)]) for i in range(9)]
+        + [(1009, [0.0] * _BASIS_DIM)],
+        "vec_id long, embedding array<float>",
+    )
+    subset = corpus.where(F.col("vec_id") % 7 == 0).select("vec_id", "embedding")
+    return [
+        dict(k=3, nprobe=2),
+        dict(k=30, nprobe=1),  # fewer than k non-NULL candidates: NULL fill
+        dict(k=5, nprobe=2, max_queries=20),
+        dict(k=5, nprobe=3, corpus_filter=F.col("source") == "web"),
+        dict(k=4, nprobe=2, queries=ext),
+        dict(k=4, nprobe=2, queries=subset),
+        dict(k=4, nprobe=2, queries=subset, exclude_self=True),
+    ]
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=lambda t: (t[0], t[4]))
+
+
+def _check_kernel_matches_pairwise(spark, corpus):
+    ids, code = _basis_codebook()
+    for case in _kernel_cases(spark, corpus):
+        got = similarity.knn_join_ivf(corpus, codebook=(ids, code), **case)
+        want = _pairwise_knn_join_ivf(spark, corpus, **case)
+        assert _rows(got) == _rows(want), case
+
+
+def _kernel_frames(Q, C, q_ids=None):
+    import pandas as pd
+
+    q = pd.DataFrame({
+        "q_id": q_ids if q_ids is not None else range(1000, 1000 + len(Q)),
+        "q_emb": list(Q), "list_id": 0,
+    })
+    c = pd.DataFrame({"vec_id": range(len(C)), "embedding": list(C), "label": 7, "list_id": 0})
+    return q, c
+
+
+def test_ivf_block_scorer_cosines_are_cosine_batch_bits(spark):
+    """With nothing pruned (k >= block size), the kernel's
+    cosines equal cosine_batch's bit for bit on random 64-d vectors,
+    also when a tiny batch size chunks both sides of the block."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(7)
+    Q = rng.standard_normal((23, 64)).astype(np.float32)
+    C = rng.standard_normal((41, 64)).astype(np.float32)
+    C[5] = 0.0  # zero norm -> NULL
+    pairwise = similarity.cosine_batch().func
+    for t in (10_000, 7, 3):
+        out = similarity._ivf_block_scorer(len(C), False, t)(*_kernel_frames(Q, C))
+        assert len(out) == len(Q) * len(C)
+        want = pairwise(
+            pd.Series([C[v] for v in out["vec_id"]]),
+            pd.Series([Q[q - 1000] for q in out["q_id"]]),
+        )
+        assert out["cosine_sim"].isna().equals(want.isna())
+        ok = ~want.isna().to_numpy()
+        got_v = out["cosine_sim"].to_numpy(dtype=float, na_value=np.nan)[ok]
+        assert np.array_equal(got_v, want.to_numpy(dtype=float, na_value=np.nan)[ok])
+
+
+def test_ivf_block_scorer_keeps_round6_ties_and_prunes_the_rest():
+    """A candidate just below the k-th best raw cosine that round6 ties
+    with it must survive (its smaller vec_id wins the tie in Spark's
+    rank window); one more than the margin below is pruned; NULLs fill
+    only up to k, smallest vec_ids first; self-matches are dropped."""
+    import numpy as np
+
+    def unit(c):
+        return np.array([c, np.sqrt(1.0 - c * c)])
+
+    Q = np.array([[1.0, 0.0]])
+    C = np.array([unit(0.5000001), unit(0.5000004), unit(0.4999), unit(0.2), [0.0, 0.0], [0.0, 0.0]])
+    out = similarity._ivf_block_scorer(1, False, 10_000)(*_kernel_frames(Q, C))
+    assert sorted(out["vec_id"]) == [0, 1]
+    out = similarity._ivf_block_scorer(5, False, 10_000)(*_kernel_frames(Q, C))
+    assert sorted(out["vec_id"]) == [0, 1, 2, 3, 4]  # 4 scored + the first NULL
+    out = similarity._ivf_block_scorer(2, True, 10_000)(*_kernel_frames(Q, C, q_ids=[1]))
+    assert sorted(out["vec_id"]) == [0, 2]  # vec 1 is the query itself
+
+
+def test_knn_join_ivf_block_kernel_matches_pairwise_plan(spark):
+    """The block kernel returns exactly the pairwise plan's rows: same
+    cosine bits, exact-tie order by vec_id, zero-norm corpus and query
+    vectors as NULL (ranked last), self-exclusion, corpus_filter and
+    max_queries."""
+    corpus = _kernel_corpus(spark).cache()
+    got = similarity.knn_join_ivf(corpus, k=3, nprobe=2, codebook=_basis_codebook())
+    # vec 0's four copies tie exactly; the tie breaks to the smaller vec_id
+    top = sorted((r["rank"], r["vec_id"], r["cosine_sim"]) for r in got.where(F.col("q_id") == 0).collect())
+    assert [v for _, v, _ in top] == [72, 73, 74] and len({s for _, _, s in top}) == 1
+    nulls = got.where(F.col("q_id") == 76).collect()
+    assert len(nulls) == 3 and all(r["cosine_sim"] is None for r in nulls)
+    _check_kernel_matches_pairwise(spark, corpus)
+
+
+def test_knn_join_ivf_block_kernel_matches_pairwise_plan_multi_block(spark, tmp_path):
+    """A small Arrow batch size splits every list into several query and
+    corpus hash blocks (and the kernel into sub-block chunks); the rows
+    stay exactly the pairwise plan's. The corpus is read from parquet so
+    that plan statistics size the blocks."""
+    import re
+
+    _kernel_corpus(spark).write.parquet(str(tmp_path / "corpus"))
+    corpus = spark.read.parquet(str(tmp_path / "corpus"))
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "5")
+    try:
+        plan = similarity.knn_join_ivf(
+            corpus, k=3, nprobe=2, codebook=_basis_codebook()
+        )._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"FlatMapCoGroupsInPandas \[list_id#\d+L?, qb#\d+, cb#\d+\]", plan), plan
+        _check_kernel_matches_pairwise(spark, corpus)
+    finally:
+        spark.conf.set(conf, prev)
+
+
 def test_audio_band_argmax_robust_all_32_bands(spark):
     """The r15 audio fingerprint kernel: a pure tone at EVERY mel band
     center must argmax back to its own band at the tone-sequence
@@ -4400,3 +4611,46 @@ def test_webp_probe_geometry_and_gate():
         bad = bytearray(p)
         bad[23] ^= 0xFF  # corrupt the 9D 01 2A start code
         multimodal._webp_probe(bytes(bad))
+
+
+def test_knn_join_ivf_ships_each_vector_once_per_block(spark, tmp_path):
+    """Pins the Python boundary of the registry's knn_join_ivf on a
+    500-vector corpus: the Arrow bytes sent to Python workers stay
+    within a slack of (3 + nprobe) corpus passes — one per probe
+    selection kernel (corpus assignment and query probes), one for the
+    corpus side of the block kernel and nprobe for its query side. The
+    pairwise plan shipped both vectors of every candidate pair, tens of
+    corpus passes on this corpus."""
+    import sys
+    from pathlib import Path
+
+    from pyspark.sql.functions import pandas_udf
+
+    from metrocloud_data_pipeline_spark.queries import SPARK_QUERIES
+    from metrocloud_data_pipeline_spark.sources import load
+
+    sys.path.append(str(Path(__file__).resolve().parents[1] / "perfbench"))
+    import inputs
+    import tracer
+
+    def bytes_sent(df):
+        before = tracer.last_execution_id(spark)
+        df.collect()
+        return sum(
+            e.metrics.get("python.bytes_sent", 0.0)
+            for e in tracer.read_executions(spark, before)
+        )
+
+    inputs.write_embeddings(str(tmp_path), 0, 500)
+    emb = load(spark, str(tmp_path), "embeddings")
+
+    @pandas_udf("long")
+    def dim(v):
+        return v.map(len)
+
+    corpus_bytes = bytes_sent(emb.select(dim("embedding")))
+    knn = SPARK_QUERIES["knn_join_ivf"](spark, str(tmp_path))
+    nprobe = 4  # the registry key's
+    sent = bytes_sent(knn)
+    assert corpus_bytes > 0
+    assert sent <= (3 + nprobe) * corpus_bytes * 1.25, (sent, corpus_bytes)

@@ -36,7 +36,8 @@ REPO = Path(__file__).resolve().parents[1]
 
 # query -> (max_exchanges, max_python_stages, max_sortmergejoins)
 # Values = the r11 PLANS.md shape. python_stages counts the DELIBERATE
-# Arrow kernels (knn_join_ivf's coarse assignment); everything else is 0.
+# Arrow kernels (knn_join_ivf's probe selection and block scoring);
+# everything else is 0.
 SENTINEL_BOUNDS: dict[str, tuple[int, int, int]] = {
     # bench worst-5 (BENCH_LOCAL / BENCH_FULL_LOCAL)
     # r15: the panel is ONE map-only Arrow kernel emitting integer
@@ -46,11 +47,15 @@ SENTINEL_BOUNDS: dict[str, tuple[int, int, int]] = {
     # only when the scan is narrower than the session parallelism.
     "text_repetition_panel": (1, 1, 0),
     "dedup_embed_semdedup": (0, 0, 0),    # downstream of localCheckpoint
-    # r15: +1 exchange = fan_out_scan's scale-adaptive round-robin on
-    # the corpus side (present only when the scan is narrower than the
-    # session parallelism — it parallelizes the assignment AND cosine
-    # Arrow kernels, which otherwise ran at the single-split scan width)
-    "knn_join_ivf": (2, 4, 0),            # 4 Arrow stages = the IVF probe path
+    # Candidate scoring is one cogroup kernel per (list, query block,
+    # corpus block): 3 Python stages = two probe-selection kernels + the
+    # block kernel (was 4 with the per-pair cosine). Exchanges 2 -> 3:
+    # was fan_out_scan's round-robin + the rank window; now the
+    # cogroup's two list_id exchanges (the pair any sort-merge join pays
+    # at scale; they replace the local broadcast join) + the rank
+    # window. The round-robin is gone: scoring runs at the shuffle
+    # width after the cogroup exchange.
+    "knn_join_ivf": (3, 3, 0),
     "kn_trigram_surprisal": (5, 0, 0),    # downstream of checkpointed type frame
     # r12: full five-level C&G recursion — +2 continuation frames
     # (pairs3/pairs2 + their normalizers), all joins stay broadcast

@@ -1,7 +1,7 @@
 """Work reused across repeated queries: the codegen cache sized to the
-registry (session.CODEGEN_CACHE_MAX_ENTRIES) and the per-table scan memo
-in sources.star_schema.load, plus the two warnings that make a lost
-safeguard visible."""
+registry (session.CODEGEN_CACHE_MAX_ENTRIES), the per-table scan memo
+in sources.star_schema.load and the registry's trained-codebook cache,
+plus the warnings that make a lost safeguard visible."""
 
 from __future__ import annotations
 
@@ -23,6 +23,7 @@ from metrocloud_data_pipeline_spark.queries import SPARK_QUERIES
 from metrocloud_data_pipeline_spark.sources import load
 
 sys.path.append(str(Path(__file__).resolve().parents[1] / "perfbench"))
+import inputs  # noqa: E402
 from workloads import IOT_KEYS  # noqa: E402
 
 
@@ -104,6 +105,27 @@ def test_missing_table_still_raises(spark, tmp_path):
         load(spark, str(tmp_path), "region")
 
 
+def test_cached_corpus_codebook_follows_a_rewritten_table(spark, tmp_path):
+    """The registry's trained-codebook cache is keyed like the scan memo:
+    an unchanged embeddings file reuses the fit, a rewritten one gets
+    the codebook a fresh fit of the new vectors gives."""
+    import numpy as np
+
+    from metrocloud_data_pipeline_spark import queries
+    from metrocloud_data_pipeline_spark.llm import similarity
+
+    d = str(tmp_path)
+    inputs.write_embeddings(d, 0, 120)
+    first = queries._corpus_codebook(spark, d)
+    assert queries._corpus_codebook(spark, d) is first
+    inputs.write_embeddings(d, 1, 120)  # same path, new vectors
+    cached = queries._corpus_codebook(spark, d)
+    emb = load(spark, d, "embeddings")
+    ids, code = similarity.trained_codebook(emb, k=similarity._auto_train_k(emb))
+    assert np.array_equal(cached[0], ids) and np.array_equal(cached[1], code)
+    assert not np.array_equal(cached[1], first[1])
+
+
 class _Conf:
     def __init__(self, values):
         self.values = values
@@ -147,3 +169,14 @@ def test_estimated_rows_fallback_warns_with_the_exception(caplog):
     (record,) = caplog.records
     assert "RuntimeError" in record.getMessage()
     assert "stats are gone" in record.getMessage()
+
+
+def test_estimated_rows_of_an_unsized_plan_warns(spark, caplog):
+    # local Python rows carry Catalyst's unknown-size placeholder, which
+    # divided by a row width would pose as a real count
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string").select("k")
+    with caplog.at_level(logging.WARNING, logger=partitioning.__name__):
+        assert partitioning._estimated_rows(df) is None
+    (record,) = caplog.records
+    assert "no size estimate" in record.getMessage()
+    assert partitioning._estimated_rows(spark.range(7)) == 7

@@ -27,6 +27,15 @@ JOIN_NODES = [
 ]
 
 
+# Arrow/pandas operators: each one ships its input rows to Python workers
+PYTHON_NODES = (
+    "ArrowEvalPython",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+)
+
+
 def plan_string(df) -> str:
     spark = df.sparkSession
     return df._jdf.queryExecution().explainString(
@@ -52,7 +61,7 @@ def summarize(plan: str) -> dict:
         "pushed_scans": scans_with_filters,
         "codegen_spans": len(set(re.findall(r"codegen id : (\d+)", plan))),
         "python_stages": sum(
-            1 for o in ops if o in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
+            1 for o in ops if o in PYTHON_NODES
         ),
     }
 
